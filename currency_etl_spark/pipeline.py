@@ -43,7 +43,8 @@ def run_pipeline(
 ) -> dict:
     """raw JSON → transform → keyed upsert → 11 analytics → reports → forecast.
 
-    Returns {"results": ..., "report": ..., "paths": ..., "forecast_rows": n}.
+    Returns {"results": ..., "report": ..., "paths": ...}. The forecast is
+    built only when ``forecast_png_dir`` asks for its charts.
     Idempotent by construction: re-running over the same raw data MERGEs to
     the same warehouse state (upsert key cc+exchangedate).
     """
@@ -64,33 +65,33 @@ def run_pipeline(
     if reports_dir:
         paths = write_reports(report, reports_dir, today)
 
-    fc = forecast_rates(rates)
     if forecast_png_dir:
-        for p in render_png(fc, forecast_png_dir):
+        for p in render_png(forecast_rates(rates), forecast_png_dir):
             paths[os.path.basename(p)] = p
 
-    return {
-        "results": results,
-        "report": report,
-        "paths": paths,
-        "forecast_rows": fc.count(),
-    }
+    return {"results": results, "report": report, "paths": paths}
 
 
 def backfill(spark: SparkSession, raw_glob: str, warehouse_path: str,
              currencies: tuple[str, ...] = DEFAULT_CURRENCIES) -> int:
     """Historical re-load: glob scan → transform → ONE merge (load_all.py
-    replacement). Later files win ties via the input file ordering, matching
-    the reference's sequential sorted-glob loop (load_all.py:62-76)."""
+    replacement). Later files win ties via the input file ordering, and
+    later rows win ties within a file, matching the reference's sequential
+    sorted-glob row loop (load_all.py:62-76)."""
     raw = read_nbu_json(spark, raw_glob).withColumn("__file", F.input_file_name())
     # Lexicographic file order (the reference sorts the glob) becomes the
     # merge priority: rows from later files win duplicate keys. The distinct
     # file list is tiny (one per ingest day) — safe to collect.
     files = sorted(r["__file"] for r in raw.select("__file").distinct().collect())
     mapping = F.create_map(*[x for i, f in enumerate(files) for x in (F.lit(f), F.lit(i))])
+    # Within a file, row order breaks the tie. A multiLine JSON file is never
+    # split, so its rows sit in one partition in file order, and the low 33
+    # bits of monotonically_increasing_id() (the row's index in its
+    # partition) rank them; the file index occupies the bits above.
+    row_in_partition = F.monotonically_increasing_id() % (1 << 33)
     with_seq = (
         transform_rates(raw, currencies=currencies, strict=True, keep=("__file",))
-        .withColumn("__seq", mapping[F.col("__file")].cast("long"))
+        .withColumn("__seq", mapping[F.col("__file")].cast("long") * (1 << 33) + row_in_partition)
         .drop("__file")
     )
     table = ParquetUpsertTable(spark, warehouse_path, RATES_KEY)

@@ -10,6 +10,7 @@ min(days, 30) clamp and {:+.2f} signed formatting.
 
 from __future__ import annotations
 
+import csv
 import datetime as _dt
 import json
 import os
@@ -98,9 +99,10 @@ def write_reports(structured: dict, reports_dir: str, today: str) -> dict[str, s
             k: (json.dumps(v, default=_jsonable) if isinstance(v, dict) else v)
             for k, v in structured[section].items()
         }
-        with open(cp, "w", encoding="utf-8") as f:
-            f.write(",".join(row.keys()) + "\n")
-            f.write(",".join(f'"{v}"' if isinstance(v, str) and "," in str(v) else str(v) for v in row.values()) + "\n")
+        with open(cp, "w", encoding="utf-8", newline="") as f:
+            w = csv.writer(f, lineterminator="\n")
+            w.writerow(row.keys())
+            w.writerow(row.values())
         paths[f"csv_{section}"] = cp
 
     tp = os.path.join(reports_dir, f"report_{today}.txt")

@@ -5,6 +5,7 @@ pandas, report shapes, and the end-to-end pipeline run-twice property."""
 
 from __future__ import annotations
 
+import csv
 import datetime as _dt
 import json
 import os
@@ -205,6 +206,10 @@ def test_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     assert os.path.exists(out1["paths"]["txt"])
     with open(out1["paths"]["json"], encoding="utf-8") as f:
         assert json.load(f)["usd"]["last"] == rate_for("USD", 39)
+    with open(out1["paths"]["csv_usd"], encoding="utf-8", newline="") as f:
+        (row,) = csv.DictReader(f)
+    assert json.loads(row["range_year"]) == out1["report"]["usd"]["range_year"]
+    assert int(row["days"]) == out1["report"]["usd"]["days"]
 
     out2 = run_pipeline(spark, raw, wh, reports_dir=reports, today=TODAY)  # rerun
     assert out2["report"] == out1["report"]
@@ -214,14 +219,22 @@ def test_backfill_glob_later_file_wins(spark, tmp_path):
     d1 = nbu_records(days=10)
     # second file overlaps days 5-9 with corrected rates
     d2 = [dict(r, rate=round(r["rate"] + 5.0, 2)) for r in nbu_records(days=10)[5 * 4 :]]
+    # third file restates USD day 2 five times: the file's last row must win
+    usd_day2 = nbu_records(days=3)[2 * 4]
+    d3 = [dict(usd_day2, rate=40.0 + i) for i in range(5)]
     write_raw_json(d1, str(tmp_path / "hist" / "exchange_2024-01-01.json"))
     write_raw_json(d2, str(tmp_path / "hist" / "exchange_2024-01-02.json"))
+    write_raw_json(d3, str(tmp_path / "hist" / "exchange_2024-01-03.json"))
     wh = str(tmp_path / "wh_bf")
     n = backfill(spark, str(tmp_path / "hist" / "exchange_*.json"), wh)
     assert n == 10 * 2  # 10 days × USD/EUR, deduped
     t = ParquetUpsertTable(spark, wh, ["cc", "exchangedate"])
     cur = t.read()
-    day7 = cur.filter(
-        (cur.cc == "USD") & (cur.exchangedate == START + _dt.timedelta(days=7))
-    ).collect()[0]
-    assert day7["rate"] == pytest.approx(rate_for("USD", 7) + 5.0)  # later file won
+
+    def usd_rate(day):
+        return cur.filter(
+            (cur.cc == "USD") & (cur.exchangedate == START + _dt.timedelta(days=day))
+        ).collect()[0]["rate"]
+
+    assert usd_rate(7) == pytest.approx(rate_for("USD", 7) + 5.0)  # later file won
+    assert usd_rate(2) == pytest.approx(44.0)  # later row of one file won

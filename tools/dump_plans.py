@@ -790,11 +790,10 @@ def main() -> None:
         "notes what to check for the plan to hold at 100 TB — these same "
         "properties are asserted by `tests/test_plans.py`.",
         "",
-        # the anti-rot marker (round-10 verdict item 2, same device as
-        # PRIORITY_ORDER_BASIS_ROUND): tests/test_plans.py pins this
-        # against len(load_catalog()), so growing the catalog without
-        # regenerating this doc fails the suite instead of silently
-        # under-representing the new entries.
+        # the anti-rot marker: tests/test_plans.py pins this against
+        # len(load_catalog()), so growing the catalog without regenerating
+        # this doc fails the suite instead of silently under-representing
+        # the new entries.
         f"PLANS_CATALOG_SIZE = {len(catalog)} "
         f"(headliners: {len(HEADLINERS)})",
         "",
