@@ -169,8 +169,17 @@ def read_nbu_json(spark: SparkSession, path: str) -> DataFrame:
     Reference: src/transform.py:19-21 (single file) and
     src/additional/load_all.py:21-23 (glob) — one parallel Spark scan
     replaces the reference's per-file Python loop (SURVEY §2.1 S2/S6).
+
+    FAILFAST, like the reference's pandas read: a truncated array or a rate
+    that is not a JSON number (``"41,5"``) fails the first job that parses
+    it, instead of loading as NULL rows that last-write-wins would store.
     """
-    return spark.read.schema(NBU_RAW_SCHEMA).option("multiLine", "true").json(path)
+    return (
+        spark.read.schema(NBU_RAW_SCHEMA)
+        .option("multiLine", "true")
+        .option("mode", "FAILFAST")
+        .json(path)
+    )
 
 
 def latest_partition(df: DataFrame, part_col: str = "ingest_date") -> DataFrame:

@@ -49,7 +49,11 @@ def transform_rates(
         .filter(F.col("cc").isin(*currencies))  # P4
     )
     if strict:
-        bad = out.filter(F.col("exchangedate").isNull()).count()
+        # The check reads `rate` as well as the date, so a FAILFAST source
+        # (sources.read_nbu_json) rejects an unparsable rate in this job,
+        # before anything is written; a column the check pruned away would
+        # first be parsed inside the warehouse merge.
+        bad = out.agg(F.count_if(F.col("exchangedate").isNull()), F.count("rate")).first()[0]
         if bad:
             raise StrictParseError(
                 f"{bad} row(s) failed strict {DATE_FMT} parse (reference raises here)"

@@ -1,7 +1,8 @@
 """Reference-pipeline parity tests (SURVEY.md §5.2): transform semantics,
 upsert idempotence/modes, the 11 analytics queries vs Python-computed
 goldens (including the LEAST(cnt,31) clamp edges), rolling/forecast vs
-pandas, report shapes, and the end-to-end pipeline run-twice property."""
+pandas, report shapes, the end-to-end pipeline run-twice property,
+malformed day files rejected before the warehouse, and the CLI."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import os
 import pandas as pd
 import pytest
 
+from currency_etl_spark.__main__ import main
 from currency_etl_spark.currency_queries import run_queries
 from currency_etl_spark.forecast import forecast_rates, rolling_avg
 from currency_etl_spark.pipeline import backfill, run_pipeline
@@ -238,3 +240,62 @@ def test_backfill_glob_later_file_wins(spark, tmp_path):
 
     assert usd_rate(7) == pytest.approx(rate_for("USD", 7) + 5.0)  # later file won
     assert usd_rate(2) == pytest.approx(44.0)  # later row of one file won
+
+
+def _tree(root: str) -> dict[str, tuple[int, int]]:
+    """Every file under `root` → (size, mtime_ns)."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out[os.path.relpath(os.path.join(d, f), root)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def _truncated(path: str) -> None:
+    """Cut the file mid-array, as an interrupted download leaves it."""
+    with open(path, encoding="utf-8") as f:
+        text = f.read()
+    with open(path, "w", encoding="utf-8") as f:
+        f.write(text[: len(text) // 2])
+
+
+def _decimal_comma(path: str) -> None:
+    """Every USD rate as a locale string, e.g. "41,5" for 41.5."""
+    with open(path, encoding="utf-8") as f:
+        recs = json.load(f)
+    recs = [dict(r, rate=str(r["rate"]).replace(".", ",")) if r["cc"] == "USD" else r for r in recs]
+    write_raw_json(recs, path)
+
+
+@pytest.mark.parametrize("damage", [_truncated, _decimal_comma], ids=["truncated", "decimal_comma"])
+def test_malformed_day_file_fails_before_the_warehouse(spark, tmp_path, damage):
+    """The reference's pandas read and Postgres load fail on both files, so
+    the pipeline must raise, and the warehouse (and its directory, where a
+    merge stages its rewrite) must keep every file untouched."""
+    root = str(tmp_path / "wh_root")
+    wh = os.path.join(root, "wh")
+    good = write_raw_json(nbu_records(days=40), str(tmp_path / "good" / "response.json"))
+    run_pipeline(spark, good, wh, today=TODAY)
+    before = _tree(root)
+    # a restatement of the stored days: loaded as NULLs it would overwrite them
+    bad = write_raw_json(nbu_records(days=40), str(tmp_path / "bad" / "response.json"))
+    damage(bad)
+    with pytest.raises(Exception, match="FAILFAST"):
+        run_pipeline(spark, bad, wh, today=TODAY)
+    assert _tree(root) == before
+    # the strict check itself rejects the file, before merge_upsert runs
+    with pytest.raises(Exception, match="FAILFAST"):
+        transform_rates(read_nbu_json(spark, bad))
+
+
+def test_cli_pipeline_and_analyze_print_the_same_report(spark, tmp_path, capsys):
+    raw = write_raw_json(nbu_records(days=40), str(tmp_path / "raw" / "response.json"))
+    wh = str(tmp_path / "wh")
+    assert main(["pipeline", "--raw", raw, "--warehouse", wh, "--today", TODAY]) == 0
+    piped = json.loads(capsys.readouterr().out)
+    assert main(["analyze", "--warehouse", wh, "--today", TODAY]) == 0
+    analyzed = json.loads(capsys.readouterr().out)
+    assert analyzed == piped
+    assert piped["usd"]["days"] == 40
+    assert piped["usd"]["last"] == rate_for("USD", 39)

@@ -1,6 +1,7 @@
 """SURVEY.md §2.8 scalar-function surface, line by line: every scalar the
 reference uses, exercised through its Spark mapping with expected values.
-These are the dialect-shim guarantees currency_queries.py relies on."""
+These are the dialect-shim guarantees currency_queries.py and its SQL
+oracle (tests/test_report_queries.py) rely on."""
 
 from __future__ import annotations
 
